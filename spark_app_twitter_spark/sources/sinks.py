@@ -5,14 +5,17 @@ The reference's sinks: S2 checkpointed parquet stream sink
 (``spark_app/functions/functions.py:47-54``) and S4 MongoDB append
 (``functions.py:117``). The append-only Mongo sink is why its
 dashboard must dedup on read — the engine's foreachBatch sink
-upserts by key instead, making reruns idempotent.
+upserts by key instead, making reruns idempotent. A foreachBatch
+frame is RDD-backed, so each extra reference to it re-runs the
+upstream plan, including its state-store commits.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 
@@ -47,13 +50,20 @@ def upsert_parquet_batch(
     """foreachBatch body: last-writer-wins upsert into a parquet
     serving table.
 
-    Reads current state, anti-joins out rows whose key appears in
-    the incoming batch, unions, rewrites. (Parquet has no row-level
-    merge; with Delta/Iceberg this becomes a MERGE INTO and the
-    rewrite disappears — the foreachBatch contract is unchanged.)
-    Deterministic under retries: re-applying the same batch yields
-    the same table (idempotent upsert), which is exactly the
-    guarantee foreachBatch needs since a batch may be re-run.
+    Unions the current table, tagged ``_new=false``, with the batch,
+    tagged ``_new=true``, and keeps for each key the rows whose tag
+    equals ``max(_new)`` over the key: the batch's rows when the key
+    is in the batch, the table's otherwise. ``batch`` is referenced
+    once, so the upstream plan runs once per trigger. (Parquet has no
+    row-level merge; with Delta/Iceberg this becomes a MERGE INTO and
+    the rewrite disappears — the foreachBatch contract is unchanged.)
+
+    Key rules: duplicate keys inside one batch are all kept; null is
+    a key like any other, so a null-key row is replaced by the next
+    batch that carries one, not duplicated. Deterministic under
+    retries: re-applying the same batch yields the same table
+    (idempotent upsert), which is exactly the guarantee foreachBatch
+    needs since a batch may be re-run.
     """
     spark = batch.sparkSession
     try:
@@ -77,10 +87,14 @@ def upsert_parquet_batch(
             raise
         out = batch
     else:
-        remaining = current.join(
-            batch.select(*keys).dropDuplicates(keys), list(keys), "left_anti"
+        tagged = current.withColumn("_new", F.lit(False)).unionByName(
+            batch.withColumn("_new", F.lit(True))
         )
-        out = remaining.unionByName(batch)
+        out = (
+            tagged.withColumn("_newest", F.max("_new").over(Window.partitionBy(*keys)))
+            .where(F.col("_new") == F.col("_newest"))
+            .drop("_new", "_newest")
+        )
     # Sever lineage before overwriting the path we just read from —
     # a lazy plan would delete its own input mid-scan.
     out = out.localCheckpoint(eager=True)

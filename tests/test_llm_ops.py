@@ -216,40 +216,44 @@ def test_r16_session_shared_relations(spark, sf_dir):
     from spark_app_twitter_spark.operators import versioning
 
     caches.clear_session_caches()
-    p1 = dedup.minhash_lsh_pairs_capped(spark, sf_dir)
-    assert dedup.minhash_lsh_pairs_capped(spark, sf_dir) is p1
-    d1 = versioning.corpus_delta(spark, sf_dir)
-    assert versioning.corpus_delta(spark, sf_dir) is d1
-    fresh_d = versioning._corpus_delta_build(spark, sf_dir)
-    kd = lambda r: r.doc_id  # noqa: E731
-    assert sorted(d1.collect(), key=kd) == sorted(fresh_d.collect(), key=kd)
-    s1 = dedup.dup_spans(spark, sf_dir)
-    assert dedup.dup_spans(spark, sf_dir) is s1
-    fresh = dedup._dup_spans_build(spark, sf_dir)
+    try:
+        p1 = dedup.minhash_lsh_pairs_capped(spark, sf_dir)
+        assert dedup.minhash_lsh_pairs_capped(spark, sf_dir) is p1
+        d1 = versioning.corpus_delta(spark, sf_dir)
+        assert versioning.corpus_delta(spark, sf_dir) is d1
+        fresh_d = versioning._corpus_delta_build(spark, sf_dir)
+        kd = lambda r: r.doc_id  # noqa: E731
+        assert sorted(d1.collect(), key=kd) == sorted(fresh_d.collect(), key=kd)
+        s1 = dedup.dup_spans(spark, sf_dir)
+        assert dedup.dup_spans(spark, sf_dir) is s1
+        fresh = dedup._dup_spans_build(spark, sf_dir)
 
-    def k(r):
-        return (r.doc_id, r.span_start)
+        def k(r):
+            return (r.doc_id, r.span_start)
 
-    assert sorted(s1.collect(), key=k) == sorted(fresh.collect(), key=k)
-    # the registered-cohort probe ranking core: cached rows must be
-    # identical to an uncached recompute over the same cohort
-    q = similarity._query_frame(spark, sf_dir)
-    r1 = similarity.probe_rank(spark, sf_dir, q, cohort="registered")
-    key = [
-        kk
-        for kk in similarity._PROBE_RANK_CACHE
-        if kk[1] == sf_dir and kk[2] == "registered"
-    ]
-    assert len(key) == 1
-    uncached = similarity.probe_rank(spark, sf_dir, q, cohort=None)
+        assert sorted(s1.collect(), key=k) == sorted(fresh.collect(), key=k)
+        # the registered-cohort probe ranking core: cached rows must be
+        # identical to an uncached recompute over the same cohort
+        q = similarity._query_frame(spark, sf_dir)
+        r1 = similarity.probe_rank(spark, sf_dir, q, cohort="registered")
+        key = [
+            kk
+            for kk in similarity._PROBE_RANK_CACHE
+            if kk[1] == sf_dir and kk[2] == "registered"
+        ]
+        assert len(key) == 1
+        uncached = similarity.probe_rank(spark, sf_dir, q, cohort=None)
 
-    def kr(r):
-        return (r.query_id, r.prk)
+        def kr(r):
+            return (r.query_id, r.prk)
 
-    cols = ["query_id", "cell", "prk"]
-    assert sorted(
-        r1.select(*cols).collect(), key=kr
-    ) == sorted(uncached.select(*cols).collect(), key=kr)
+        cols = ["query_id", "cell", "prk"]
+        assert sorted(
+            r1.select(*cols).collect(), key=kr
+        ) == sorted(uncached.select(*cols).collect(), key=kr)
+    finally:
+        # leave no warm relation behind for later tests
+        caches.clear_session_caches()
 
 
 def test_dup_spans_planted_islands(spark, tmp_path):

@@ -38,6 +38,31 @@ def test_upsert_parquet_batch_last_writer_wins(spark, tmp_path):
     assert again == got
 
 
+def test_upsert_parquet_batch_keeps_duplicate_keys_of_one_batch(spark, tmp_path):
+    path = str(tmp_path / "serving")
+    schema = "k string, run int"
+    upsert_parquet_batch(spark.createDataFrame([("a", 0)], schema), 0, path, keys=["k"])
+    b1 = spark.createDataFrame([("a", 1), ("a", 2), ("b", 1), ("b", 1)], schema)
+    upsert_parquet_batch(b1, 1, path, keys=["k"])
+    got = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    assert got == [("a", 1), ("a", 2), ("b", 1), ("b", 1)]
+
+
+def test_upsert_parquet_batch_replaces_null_key_rows(spark, tmp_path):
+    path = str(tmp_path / "serving")
+    schema = "k string, t string, run int"
+    b0 = spark.createDataFrame([(None, "x", 0), ("a", None, 0), ("a", "x", 0)], schema)
+    upsert_parquet_batch(b0, 0, path, keys=["k", "t"])
+    b1 = spark.createDataFrame([(None, "x", 1), ("a", None, 1)], schema)
+    upsert_parquet_batch(b1, 1, path, keys=["k", "t"])
+    upsert_parquet_batch(b1, 1, path, keys=["k", "t"])
+    got = sorted(
+        (tuple(r) for r in spark.read.parquet(path).collect()),
+        key=lambda r: (r[0] or "", r[1] or ""),
+    )
+    assert got == [(None, "x", 1), ("a", None, 1), ("a", "x", 0)]
+
+
 def test_write_training_shards(spark, tmp_path, sf_dir):
     import glob
 

@@ -137,6 +137,69 @@ def test_hourly_serving_upsert_and_idempotence(spark, tmp_path):
     assert spark.read.parquet(serving).count() == 4
 
 
+def test_serving_trigger_evaluates_its_batch_once(spark, tmp_path):
+    """A foreachBatch frame is RDD-backed: each reference the upsert
+    makes to it re-runs the stateful aggregation, state-store commit
+    included, and adds its operator metrics again. Evaluated once, a
+    trigger drops one row per late event and updates one state row per
+    changed cell."""
+    src = str(tmp_path / "src")
+    serving = str(tmp_path / "serving")
+    # Rows count as late against the previous batch's watermark, so the
+    # late events ride in the third batch, behind the 16:20 watermark
+    # the first batch's maximum sets for the second.
+    first = [
+        _tweet(1, "Zelensky", "2022-03-13T14:21:09.000Z", "fast peace talks"),
+        _tweet(2, "NATO", "2022-03-13T16:30:00.000Z", "the alliance is big"),
+    ]
+    second = [_tweet(3, "NATO", "2022-03-13T16:20:00.000Z", "a big deal")]
+    # each sits alone in its hour cell, so it is one row after partial
+    # aggregation
+    late = [
+        _tweet(10 + h, "Biden", f"2022-03-13T{h:02d}:05:00.000Z", "old news")
+        for h in (9, 10, 11)
+    ]
+    on_time = [
+        _tweet(20, "Zelensky", "2022-03-13T16:40:00.000Z", "a small win"),
+        _tweet(21, "Zelensky", "2022-03-13T16:41:00.000Z", "a big win"),
+        _tweet(22, "Putin", "2022-03-13T16:45:00.000Z", "slow advance"),
+        _tweet(23, "NATO", "2022-03-13T16:50:00.000Z", "fast summit"),
+    ]
+    changed_cells = 3  # the 16:00 cells of Zelensky, Putin and NATO
+    # the file source takes the oldest file first
+    for i, rows in enumerate((first, second, late + on_time)):
+        _write_fixture(src, rows, name=f"part{i}.json")
+        mtime = 1_600_000_000 + i
+        os.utime(os.path.join(src, f"part{i}.json"), (mtime, mtime))
+
+    stream = (
+        spark.readStream.schema(sing.WIRE).option("maxFilesPerTrigger", 1).json(src)
+    )
+    q = windowed.run_hourly_serving(
+        parse_tweet_stream(stream), serving, str(tmp_path / "ckpt"),
+        available_now=True,
+    )
+    q.awaitTermination(180)
+
+    progress = {p.batchId: p for p in q.recentProgress}
+    assert progress[2].numInputRows == len(late) + len(on_time)
+    dropped = sum(
+        op.numRowsDroppedByWatermark for p in q.recentProgress for op in p.stateOperators
+    )
+    assert dropped == len(late)
+    assert sum(op.numRowsUpdated for op in progress[2].stateOperators) == changed_cells
+    cells = {
+        (str(r.window_start), r.topic): r.counts
+        for r in spark.read.parquet(serving).collect()
+    }
+    assert cells == {
+        ("2022-03-13 14:00:00", "Zelensky"): 1,
+        ("2022-03-13 16:00:00", "NATO"): 3,
+        ("2022-03-13 16:00:00", "Zelensky"): 2,
+        ("2022-03-13 16:00:00", "Putin"): 1,
+    }
+
+
 def test_streaming_agg_matches_batch(spark, tmp_path):
     """Stream(availableNow) and batch over the same input agree —
     incremental execution must not change semantics."""
