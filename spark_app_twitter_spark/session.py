@@ -17,7 +17,12 @@ from pyspark.sql import SparkSession
 # Defaults chosen for the 100 TB design point, not the local test box:
 # - AQE on: runtime shuffle-partition coalescing, skew-join splitting,
 #   SMJ->BHJ conversion when a side turns out small.
-# - shuffle.partitions is only the *initial* number; AQE coalesces.
+# - shuffle.partitions is only the *initial* number; AQE coalesces in
+#   batch queries. Not inside streaming queries: each micro-batch, its
+#   foreachBatch body included, runs with AQE off, and the checkpoint
+#   pins the width of stateful operators for the query's lifetime, so
+#   a streaming query sizes its own shuffles
+#   (streaming/windowed.run_hourly_serving, sources/sinks.py).
 # - 128 MiB scan partitions keep scan tasks memory-bounded regardless
 #   of total input size.
 # - Arrow on: every Pandas UDF crosses the JVM<->Python boundary in

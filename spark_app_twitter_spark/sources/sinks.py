@@ -7,7 +7,11 @@ The reference's sinks: S2 checkpointed parquet stream sink
 dashboard must dedup on read — the engine's foreachBatch sink
 upserts by key instead, making reruns idempotent. A foreachBatch
 frame is RDD-backed, so each extra reference to it re-runs the
-upstream plan, including its state-store commits.
+upstream plan, including its state-store commits. A foreachBatch
+body runs in the stream's cloned session: adaptive execution is off
+there and the shuffle width is the one pinned by the checkpoint, so
+nothing coalesces a small shuffle and the upsert chooses its own
+width — one partition, one file.
 """
 
 from __future__ import annotations
@@ -58,6 +62,12 @@ def upsert_parquet_batch(
     row-level merge; with Delta/Iceberg this becomes a MERGE INTO and
     the rewrite disappears — the foreachBatch contract is unchanged.)
 
+    The table is a bounded aggregate (one row per topic x hour) and
+    a foreachBatch body gets no adaptive sizing (see the module
+    docstring), so the union goes to one partition before the window:
+    one partition satisfies the window's clustering, so no second
+    exchange runs, and the table is rewritten as one file.
+
     Key rules: duplicate keys inside one batch are all kept; null is
     a key like any other, so a null-key row is replaced by the next
     batch that carries one, not duplicated. Deterministic under
@@ -85,10 +95,12 @@ def upsert_parquet_batch(
                     pass
         if "PATH_NOT_FOUND" not in err_class and "Path does not exist" not in str(e):
             raise
-        out = batch
+        out = batch.repartition(1)
     else:
-        tagged = current.withColumn("_new", F.lit(False)).unionByName(
-            batch.withColumn("_new", F.lit(True))
+        tagged = (
+            current.withColumn("_new", F.lit(False))
+            .unionByName(batch.withColumn("_new", F.lit(True)))
+            .repartition(1)
         )
         out = (
             tagged.withColumn("_newest", F.max("_new").over(Window.partitionBy(*keys)))

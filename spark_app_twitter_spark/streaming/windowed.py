@@ -18,6 +18,12 @@ functions.py:42-43,63-71``). The engine instead:
 State at scale: |topics| x |open windows| rows for the aggregation +
 one entry per id inside the watermark horizon for dedup — both
 bounded by the watermark delay, independent of total stream length.
+State is partitioned by the shuffle width, which the first batch
+records in the checkpoint and every restart reuses. The serving
+query starts at one wave of state tasks (the default parallelism):
+its state is a few rows per topic and its input is map-side partial
+aggregates, so a wider store only adds a delta-file commit per
+partition to every trigger.
 """
 
 from __future__ import annotations
@@ -229,12 +235,24 @@ def run_hourly_serving(
     available_now: bool = False,
 ) -> StreamingQuery:
     """The full replacement for the reference's cron loop: one
-    long-lived query maintaining the serving table incrementally."""
+    long-lived query maintaining the serving table incrementally.
+
+    The state width is one wave of tasks (see the module docstring).
+    The query clones the session at ``start()``, so the session's own
+    width is restored right after.
+    """
     agg = hourly_topic_aggregate(parsed_stream, watermark)
-    return write_upsert_stream(
-        agg,
-        serving_path,
-        checkpoint,
-        keys=["window_start", "topic"],
-        trigger_available_now=available_now,
-    )
+    spark = parsed_stream.sparkSession
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+    try:
+        return write_upsert_stream(
+            agg,
+            serving_path,
+            checkpoint,
+            keys=["window_start", "topic"],
+            trigger_available_now=available_now,
+        )
+    finally:
+        spark.conf.set(key, prev)

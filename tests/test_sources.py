@@ -63,6 +63,41 @@ def test_upsert_parquet_batch_replaces_null_key_rows(spark, tmp_path):
     assert got == [(None, "x", 1), ("a", None, 1), ("a", "x", 0)]
 
 
+def test_upsert_writes_one_data_file(spark, tmp_path):
+    """The serving table is a bounded aggregate: the first upsert, a
+    later upsert and a datalake backfill each leave one data file."""
+    import glob
+
+    from spark_app_twitter_spark.jobs import backfill_serving
+    from spark_app_twitter_spark.operators.ingest import parse_tweet_stream
+    from spark_app_twitter_spark.streaming.ingest import WIRE
+    from tests.test_streaming import FIXTURE, _write_fixture
+
+    def data_files(path):
+        return glob.glob(f"{path}/part-*.parquet")
+
+    path = str(tmp_path / "serving")
+    schema = "k string, run int"
+    b0 = spark.createDataFrame([(c, 0) for c in "abcdefgh"], schema).repartition(4)
+    upsert_parquet_batch(b0, 0, path, keys=["k"])
+    assert len(data_files(path)) == 1
+    b1 = spark.createDataFrame([("a", 1), ("z", 1)], schema).repartition(2)
+    upsert_parquet_batch(b1, 1, path, keys=["k"])
+    assert len(data_files(path)) == 1
+    assert spark.read.parquet(path).count() == 9
+
+    src, lake = str(tmp_path / "src"), str(tmp_path / "lake")
+    _write_fixture(src, FIXTURE[:4])
+    parse_tweet_stream(spark.read.schema(WIRE).json(src)).write.partitionBy(
+        "date", "hour"
+    ).parquet(lake)
+    serving = str(tmp_path / "hourly")
+    for _ in range(2):
+        backfill_serving(spark, lake, serving, "2022-03-13", "2022-03-14")
+        assert len(data_files(serving)) == 1
+    assert spark.read.parquet(serving).count() == 4
+
+
 def test_write_training_shards(spark, tmp_path, sf_dir):
     import glob
 

@@ -3,6 +3,7 @@ exactly-once restart, watermark dedup, and the windowed serving upsert
 (SURVEY §5.3)."""
 
 import datetime
+import glob
 import json
 import os
 
@@ -10,6 +11,7 @@ from pyspark.sql import functions as F
 
 from spark_app_twitter_spark.operators.ingest import parse_tweet_stream
 from spark_app_twitter_spark.sources.parquet import read_datalake_hour
+from spark_app_twitter_spark.sources.sinks import write_upsert_stream
 from spark_app_twitter_spark.streaming import ingest as sing
 from spark_app_twitter_spark.streaming import windowed
 
@@ -198,6 +200,81 @@ def test_serving_trigger_evaluates_its_batch_once(spark, tmp_path):
         ("2022-03-13 16:00:00", "Zelensky"): 2,
         ("2022-03-13 16:00:00", "Putin"): 1,
     }
+
+
+def _state_widths(q) -> set[int]:
+    return {
+        op.numShufflePartitions for p in q.recentProgress for op in p.stateOperators
+    }
+
+
+def _serving_cells(rows) -> dict:
+    return {(str(r.window_start), r.topic): tuple(r) for r in rows}
+
+
+def test_fresh_serving_query_runs_one_wave_of_state_tasks(spark, tmp_path):
+    """A fresh serving checkpoint records the default parallelism as
+    its state width, whatever the session width; the session's own
+    width is left as it was, and the upsert writes one file."""
+    src = str(tmp_path / "src")
+    serving = str(tmp_path / "serving")
+    _write_fixture(src, FIXTURE[:4])
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        q = windowed.run_hourly_serving(
+            parse_tweet_stream(sing.read_json_stream(spark, src)),
+            serving, str(tmp_path / "ckpt"), available_now=True,
+        )
+        assert spark.conf.get(key) == "7"
+        q.awaitTermination(180)
+    finally:
+        spark.conf.set(key, prev)
+    assert _state_widths(q) == {spark.sparkContext.defaultParallelism}
+    assert len(glob.glob(os.path.join(serving, "part-*.parquet"))) == 1
+
+
+def test_serving_checkpoint_restarts_at_its_recorded_width(spark, tmp_path):
+    """A checkpoint created at another width keeps it on restart
+    through run_hourly_serving, and the table stays correct."""
+    src = str(tmp_path / "src")
+    serving = str(tmp_path / "serving")
+    ckpt = str(tmp_path / "ckpt")
+    _write_fixture(src, FIXTURE[:4])
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        q = write_upsert_stream(
+            windowed.hourly_topic_aggregate(
+                parse_tweet_stream(sing.read_json_stream(spark, src))
+            ),
+            serving, ckpt, keys=["window_start", "topic"],
+            trigger_available_now=True,
+        )
+        q.awaitTermination(180)
+    finally:
+        spark.conf.set(key, prev)
+    assert _state_widths(q) == {7}
+
+    _write_fixture(
+        src,
+        [_tweet(6, "Biden", "2022-03-14T01:00:00.000Z", "a small win")],
+        name="part1.json",
+    )
+    q2 = windowed.run_hourly_serving(
+        parse_tweet_stream(sing.read_json_stream(spark, src)),
+        serving, ckpt, available_now=True,
+    )
+    q2.awaitTermination(180)
+    assert _state_widths(q2) == {7}
+    batch = windowed.hourly_topic_aggregate(
+        parse_tweet_stream(spark.read.schema(sing.WIRE).json(src))
+    )
+    got = _serving_cells(spark.read.parquet(serving).collect())
+    assert len(got) == 5
+    assert got == _serving_cells(batch.collect())
 
 
 def test_streaming_agg_matches_batch(spark, tmp_path):
@@ -1279,6 +1356,10 @@ def test_streaming_token_budget_admission_matches_prefix(
                     )
                     + "\n"
                 )
+        # the file source takes the oldest file first; files written
+        # within one millisecond would tie and arrive in listing order
+        mtime = 1_600_000_000 + i
+        os.utime(os.path.join(src, f"p{i:02d}.json"), (mtime, mtime))
     stream = (
         spark.readStream.schema("doc_id long, source string, text string")
         .option("maxFilesPerTrigger", 1)
