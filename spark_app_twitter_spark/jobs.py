@@ -10,6 +10,19 @@ loop with two *long-lived* streaming queries sharing one parsed
 stream definition — identical data products, none of the restart/
 late-data defects (SURVEY §2.8).
 
+The two queries run on two cadences. The serving query must be
+fresh within seconds, so it takes the next micro-batch as soon as the
+previous one ends; each of its triggers is one Spark job that writes
+the upserted table to a staging directory and swaps it in
+(sources/sinks.py). The datalake ingest feeds hour-granular batch
+readers (``backfill_serving``, the hourly aggregate), to which a few
+seconds of lag are invisible, so it triggers every
+``sinks.LAKE_TRIGGER`` instead of back to back: fewer checkpoint-log
+writes, listings, jobs and small files compete with the serving query
+for the driver and the cores. Each query owns its trigger and both
+sinks are idempotent, so neither depends on the other's pace.
+``available_now`` drains both and stops.
+
 A user of the reference maps their config 1:1::
 
     cfg = PipelineConfig(

@@ -22,7 +22,9 @@ from pyspark.sql import SparkSession
 #   foreachBatch body included, runs with AQE off, and the checkpoint
 #   pins the width of stateful operators for the query's lifetime, so
 #   a streaming query sizes its own shuffles
-#   (streaming/windowed.run_hourly_serving, sources/sinks.py).
+#   (streaming/windowed.run_hourly_serving; sources/sinks.py, whose
+#   serving upsert writes a one-file table to a staging directory in
+#   the trigger's one job and publishes it by directory swap).
 # - 128 MiB scan partitions keep scan tasks memory-bounded regardless
 #   of total input size.
 # - Arrow on: every Pandas UDF crosses the JVM<->Python boundary in

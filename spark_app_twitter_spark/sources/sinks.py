@@ -12,15 +12,49 @@ body runs in the stream's cloned session: adaptive execution is off
 there and the shuffle width is the one pinned by the checkpoint, so
 nothing coalesces a small shuffle and the upsert chooses its own
 width — one partition, one file.
+
+Parquet tables that are rewritten from their own contents (the
+upsert, compaction) are published by directory swap: the new table
+is written to a staging sibling of the path, then the path is
+renamed to a ``previous`` sibling, staging is renamed to the path,
+and ``previous`` is deleted. Reads of the old table and the write of
+the new one touch different directories, so no materialization
+barrier is needed and readers see the old table, briefly no table,
+then the new table — never an empty or half-written one (a scan that
+spans the swap fails on a moved file and must be retried). Each rewrite
+starts by finishing or rolling back a swap that a crash interrupted
+(see :func:`_recover`), which assumes one writer per path. The
+renames go through the path's Hadoop ``FileSystem`` and are atomic on
+HDFS and local disks; object stores (S3, GCS) copy and delete on
+rename, so there the swap is neither atomic nor cheap, and a table
+format with MERGE INTO (Delta, Iceberg) is the production answer.
 """
 
 from __future__ import annotations
 
+import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+from spark_app_twitter_spark.functions.caches import register_cache
+
+# The datalake's trigger interval when it runs continuously. Its
+# readers (backfill_serving, the hourly batch jobs) read whole hours,
+# so a few seconds of lag is invisible to them, while every ingest
+# trigger pays checkpoint-log writes, a source listing, a job and one
+# file per task and hour partition on the driver and cores that the
+# serving query shares.
+LAKE_TRIGGER = "5 seconds"
+
+# Schema of each table the upsert published, per (applicationId,
+# qualified path): later upserts read the table with it instead of
+# running a schema-inference job. A table the session did not publish
+# is inferred. One writer per path keeps the entry current; call
+# clear_session_caches() after rewriting the path by other means.
+_TABLE_SCHEMA: dict[tuple, object] = register_cache({})
 
 
 def write_partitioned_parquet_stream(
@@ -34,7 +68,9 @@ def write_partitioned_parquet_stream(
 
     Exactly-once comes from checkpoint + the sink's _spark_metadata
     commit log. ``availableNow`` drains the source and stops —
-    deterministic for tests and batch-backfill runs.
+    deterministic for tests and batch-backfill runs. Otherwise the
+    query triggers every :data:`LAKE_TRIGGER`, on its own cadence
+    rather than back to back.
     """
     w: DataStreamWriter = (
         df.writeStream.format("parquet")
@@ -45,7 +81,59 @@ def write_partitioned_parquet_stream(
     )
     if trigger_available_now:
         w = w.trigger(availableNow=True)
+    else:
+        w = w.trigger(processingTime=LAKE_TRIGGER)
     return w.start()
+
+
+def _table(spark: SparkSession, path: str):
+    """(FileSystem, fully qualified Hadoop path) of ``path``."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs, fs.makeQualified(p)
+
+
+def _sibling(spark: SparkSession, table, suffix: str):
+    """A hidden (dot-prefixed) sibling of ``table``, so listings of the
+    parent directory skip it."""
+    name = f".{table.getName()}.{suffix}"
+    return spark._jvm.org.apache.hadoop.fs.Path(table.getParent(), name)
+
+
+def _rename(fs, src, dst) -> None:
+    if not fs.rename(src, dst):
+        raise OSError(f"could not rename {src.toString()} to {dst.toString()}")
+
+
+def _recover(spark: SparkSession, fs, table) -> None:
+    """Finish or roll back an interrupted swap. A ``previous`` sibling
+    next to a missing table means the crash came between the two
+    renames: ``previous`` is the whole old table (a directory rename
+    is atomic), so it is renamed back and the interrupted batch is
+    re-applied to it. Next to an existing table it is the leftover of
+    a completed swap. Staging directories are leftovers of failed
+    attempts."""
+    previous = _sibling(spark, table, "previous")
+    if fs.exists(previous):
+        if fs.exists(table):
+            fs.delete(previous, True)
+        else:
+            _rename(fs, previous, table)
+    for st in fs.globStatus(_sibling(spark, table, "staging-*")) or []:
+        fs.delete(st.getPath(), True)
+
+
+def _publish(out: DataFrame, fs, table) -> None:
+    """Write ``out`` to a staging sibling named per attempt, then swap
+    it in for ``table`` (see the module docstring)."""
+    spark = out.sparkSession
+    staging = _sibling(spark, table, f"staging-{uuid.uuid4().hex}")
+    previous = _sibling(spark, table, "previous")
+    out.write.parquet(staging.toString())
+    if fs.exists(table):
+        _rename(fs, table, previous)
+    _rename(fs, staging, table)
+    fs.delete(previous, True)
 
 
 def upsert_parquet_batch(
@@ -58,15 +146,29 @@ def upsert_parquet_batch(
     tagged ``_new=true``, and keeps for each key the rows whose tag
     equals ``max(_new)`` over the key: the batch's rows when the key
     is in the batch, the table's otherwise. ``batch`` is referenced
-    once, so the upstream plan runs once per trigger. (Parquet has no
-    row-level merge; with Delta/Iceberg this becomes a MERGE INTO and
-    the rewrite disappears — the foreachBatch contract is unchanged.)
+    once, so the upstream plan runs once per trigger, inside the one
+    job that writes the new table. (Parquet has no row-level merge;
+    with Delta/Iceberg this becomes a MERGE INTO and the rewrite
+    disappears — the foreachBatch contract is unchanged.)
 
     The table is a bounded aggregate (one row per topic x hour) and
     a foreachBatch body gets no adaptive sizing (see the module
     docstring), so the union goes to one partition before the window:
     one partition satisfies the window's clustering, so no second
-    exchange runs, and the table is rewritten as one file.
+    exchange runs, and the table is written as one file.
+
+    The new table is published by directory swap (module docstring):
+    readers never see it empty. A crash between the swap's two renames
+    leaves the old table in the ``previous`` sibling; the next call —
+    the re-run of the same batch, since it never committed — renames
+    it back first, so the batch is re-applied to the old table instead
+    of being taken for the first one. One writer per serving path.
+
+    A table this session has not published is read by inferring its
+    schema; the schema of each table the session publishes is
+    recorded, and later upserts read the table with it, skipping the
+    inference job. Either way a table whose columns differ from the
+    batch's fails ``unionByName`` loudly.
 
     Key rules: duplicate keys inside one batch are all kept; null is
     a key like any other, so a null-key row is replaced by the next
@@ -76,8 +178,15 @@ def upsert_parquet_batch(
     needs since a batch may be re-run.
     """
     spark = batch.sparkSession
+    fs, table = _table(spark, path)
+    _recover(spark, fs, table)
+    skey = (spark.sparkContext.applicationId, table.toString())
+    published = _TABLE_SCHEMA.get(skey)
     try:
-        current = spark.read.parquet(path)
+        if published is not None:
+            current = spark.read.schema(published).parquet(path)
+        else:
+            current = spark.read.parquet(path)
     except Exception as e:
         # ONLY the missing-path case means "first batch". Any other
         # read failure (permissions, corrupt footer, concurrent
@@ -107,10 +216,8 @@ def upsert_parquet_batch(
             .where(F.col("_new") == F.col("_newest"))
             .drop("_new", "_newest")
         )
-    # Sever lineage before overwriting the path we just read from —
-    # a lazy plan would delete its own input mid-scan.
-    out = out.localCheckpoint(eager=True)
-    out.write.mode("overwrite").parquet(path)
+    _publish(out, fs, table)
+    _TABLE_SCHEMA[skey] = out.schema
 
 
 def write_upsert_stream(
@@ -278,16 +385,15 @@ def compact_parquet_table(
     The maintenance job every streaming sink eventually needs —
     micro-batches accrete many small files, and scan cost at 100 TB
     is dominated by file-open overhead once file count outgrows
-    task count. Returns the row count (lineage is severed before the
-    overwrite for the same read-then-rewrite-safety reason as the
-    upsert).
+    task count. Published by directory swap like the upsert (module
+    docstring). Returns the row count, read from the new files'
+    footers.
     """
+    fs, table = _table(spark, path)
+    _recover(spark, fs, table)
     df = spark.read.parquet(path)
     out = df.repartition(n_files)
     if sort_cols:
         out = out.sortWithinPartitions(*sort_cols)
-    out = out.localCheckpoint(eager=True)
-    out.write.mode("overwrite").parquet(path)
-    # count from the checkpointed blocks — no second scan of the
-    # just-written table
-    return out.count()
+    _publish(out, fs, table)
+    return spark.read.schema(df.schema).parquet(path).count()

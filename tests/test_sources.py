@@ -1,5 +1,8 @@
 """Unit tests for source/sink helpers not covered by streaming tests."""
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from spark_app_twitter_spark.sources.kafka import tweet_key
@@ -96,6 +99,113 @@ def test_upsert_writes_one_data_file(spark, tmp_path):
         backfill_serving(spark, lake, serving, "2022-03-13", "2022-03-14")
         assert len(data_files(serving)) == 1
     assert spark.read.parquet(serving).count() == 4
+
+
+def _siblings(path: str) -> list[str]:
+    """Staging and previous directories the swap publish leaves next
+    to ``path``."""
+    name = os.path.basename(path)
+    return sorted(n for n in os.listdir(os.path.dirname(path)) if n.startswith(f".{name}."))
+
+
+def test_upsert_swap_recovers_from_a_crash_between_renames(spark, tmp_path, monkeypatch):
+    """The upsert publishes by directory swap. A crash between its two
+    renames leaves the old table in the ``previous`` sibling; the
+    re-run of the batch restores it and re-applies the batch, giving
+    the rows of an uninterrupted run. At no step does the path hold
+    an empty table: it holds the old rows, the new rows or nothing."""
+    from spark_app_twitter_spark.sources import sinks
+
+    schema = "k string, run int"
+    b0 = spark.createDataFrame([("a", 0), ("b", 0)], schema)
+    b1 = spark.createDataFrame([("b", 1), ("c", 1)], schema)
+
+    def rows(path):
+        if not os.path.exists(path):
+            return None
+        return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+    clean = str(tmp_path / "clean")
+    upsert_parquet_batch(b0, 0, clean, keys=["k"])
+    upsert_parquet_batch(b1, 1, clean, keys=["k"])
+    want = rows(clean)
+    assert want == [("a", 0), ("b", 1), ("c", 1)]
+
+    path = str(tmp_path / "serving")
+    rename = sinks._rename
+    seen = []
+
+    def observed(fs, src, dst):
+        seen.append(rows(path))
+        rename(fs, src, dst)
+        seen.append(rows(path))
+
+    def crash_on_publish(fs, src, dst):
+        if ".staging-" in src.getName():
+            raise OSError("crash between the renames")
+        observed(fs, src, dst)
+
+    monkeypatch.setattr(sinks, "_rename", observed)
+    upsert_parquet_batch(b0, 0, path, keys=["k"])
+    old = rows(path)
+    assert old == [("a", 0), ("b", 0)]
+
+    monkeypatch.setattr(sinks, "_rename", crash_on_publish)
+    with pytest.raises(OSError, match="crash between the renames"):
+        upsert_parquet_batch(b1, 1, path, keys=["k"])
+    assert not os.path.exists(path)
+    left = _siblings(path)
+    assert ".serving.previous" in left
+    assert any(n.startswith(".serving.staging-") for n in left)
+
+    monkeypatch.setattr(sinks, "_rename", observed)
+    upsert_parquet_batch(b1, 1, path, keys=["k"])
+    assert rows(path) == want
+    assert _siblings(path) == []
+    assert all(state in (None, old, want) for state in seen)
+    assert old in seen and want in seen
+
+    # a completed swap interrupted before deleting ``previous`` only
+    # leaves that directory behind; the next upsert removes it
+    monkeypatch.setattr(sinks, "_rename", rename)
+    os.makedirs(os.path.join(tmp_path, ".serving.previous"))
+    upsert_parquet_batch(b1, 1, path, keys=["k"])
+    assert rows(path) == want
+    assert _siblings(path) == []
+
+
+def test_upsert_schema_drift_fails_loudly(spark, tmp_path):
+    """A table whose columns differ from the batch's makes the upsert
+    raise and is left as it was, whether or not the session recorded
+    the path's schema earlier; clear_session_caches() forgets the
+    recorded schemas."""
+    from spark_app_twitter_spark.functions.caches import clear_session_caches
+    from spark_app_twitter_spark.sources import sinks
+
+    path = str(tmp_path / "serving")
+    spark.createDataFrame([("a", 0)], "k string, run int").write.parquet(path)
+    before = sorted(os.listdir(path))
+    drifted = spark.createDataFrame([("a", 1.5)], "k string, score double")
+    with pytest.raises(Exception, match="score|run"):
+        upsert_parquet_batch(drifted, 0, path, keys=["k"])
+    assert sorted(os.listdir(path)) == before
+    assert [tuple(r) for r in spark.read.parquet(path).collect()] == [("a", 0)]
+    assert _siblings(path) == []
+
+    # the schema is recorded once the upsert has published the table
+    key = (spark.sparkContext.applicationId, f"file:{path}")
+    assert key not in sinks._TABLE_SCHEMA
+    batch = spark.createDataFrame([("b", 1)], "k string, run int")
+    upsert_parquet_batch(batch, 1, path, keys=["k"])
+    upsert_parquet_batch(batch, 2, path, keys=["k"])
+    assert key in sinks._TABLE_SCHEMA
+    with pytest.raises(Exception, match="score|run"):
+        upsert_parquet_batch(drifted, 3, path, keys=["k"])
+    assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == [
+        ("a", 0), ("b", 1)
+    ]
+    clear_session_caches()
+    assert not sinks._TABLE_SCHEMA
 
 
 def test_write_training_shards(spark, tmp_path, sf_dir):

@@ -470,6 +470,47 @@ def test_run_pipeline_end_to_end(spark, tmp_path):
     assert serving_rows == 4  # one cell per (topic, hour) in the fixture
 
 
+def test_run_pipeline_lake_runs_on_its_own_cadence(spark, tmp_path):
+    """Run continuously, the datalake ingest triggers every
+    LAKE_TRIGGER while the serving query keeps the default trigger
+    (the next batch as soon as the previous one ends); an
+    ``available_now`` run on the same checkpoints still drains and
+    stops."""
+    import dataclasses
+
+    from spark_app_twitter_spark.jobs import PipelineConfig, run_pipeline
+    from spark_app_twitter_spark.sources.sinks import LAKE_TRIGGER
+
+    src = str(tmp_path / "src")
+    _write_fixture(src, FIXTURE[:4])
+    cfg = PipelineConfig(
+        file_source_path=src,
+        datalake_path=str(tmp_path / "lake"),
+        serving_path=str(tmp_path / "serve"),
+        checkpoint_root=str(tmp_path / "ckpt"),
+    )
+    trigger = spark._jvm.org.apache.spark.sql.streaming.Trigger
+    queries = run_pipeline(spark, cfg)
+    try:
+        ingest, serving = (q._jsq.streamingQuery().trigger() for q in queries)
+        assert ingest.equals(trigger.ProcessingTime(LAKE_TRIGGER))
+        assert serving.equals(trigger.ProcessingTime(0))
+        for q in queries:
+            q.processAllAvailable()
+    finally:
+        for q in queries:
+            q.stop()
+    assert spark.read.parquet(cfg.datalake_path).count() == 4
+    assert spark.read.parquet(cfg.serving_path).count() == 4
+
+    _write_fixture(src, [_tweet(6, "Biden", "2022-03-14T01:00:00.000Z", "a small win")],
+                   name="part1.json")
+    for q in run_pipeline(spark, dataclasses.replace(cfg, available_now=True)):
+        assert q.awaitTermination(180)
+    assert spark.read.parquet(cfg.datalake_path).count() == 5
+    assert spark.read.parquet(cfg.serving_path).count() == 5
+
+
 def test_late_events_dead_letter_split(spark, tmp_path):
     """The quarantine split: events older than (batch max ts -
     watermark) land in the dead-letter path instead of vanishing."""
